@@ -44,6 +44,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from de_spark.session import run_concurrently
+
 SECTION_ORDER = {"so": 0, "s": 1, "o": 2, "p": 3}
 
 
@@ -162,9 +164,10 @@ def build_term_uids(triples_raw: DataFrame, flags: DataFrame | None = None) -> D
 
     Schema: term: string, uid: long (uid is 1-based).
 
-    Standalone path (unit tests, ``add_graph`` appends).  The build
-    pipeline uses :func:`build_dict_and_uids`, which derives the uids
-    from the dictionary's own sorted layout in a single index pass.
+    Standalone path (unit tests).  The build pipeline uses
+    :func:`build_dict_and_uids`, which derives the uids from the
+    dictionary's own sorted layout in a single index pass; a store add
+    uses :func:`extend_dict_and_uids`.
     """
     if flags is None:
         flags = position_flags(triples_raw)
@@ -254,6 +257,57 @@ def build_dict_and_uids(
         .select("graph", "term", "section", "sec_id", "uid")
     )
     return dict_df, term_uids
+
+
+def extend_dict_and_uids(
+    flags: DataFrame,
+    term_uids: DataFrame,
+    handles: list,
+    extra: list | tuple = (),
+) -> tuple[DataFrame, DataFrame, DataFrame, list]:
+    """Dictionary rows for NEW graphs plus uids for their unseen terms
+    (a store add).
+
+    ``term_uids`` is the store's uid table.  Unseen terms get
+    ``max_uid + 1 …`` in lexicographic order, with no gaps after the
+    current max; existing uids never change.  The uid table's max, the
+    index pass over the unseen terms and the (graph, sec_ord, term)
+    index pass that numbers the sections are independent, so they run
+    concurrently on driver threads, together with the caller's
+    ``extra`` thunks (other independent actions).
+
+    Returns (dict_df, new_uids, graph_uids, extra_results): the
+    dictionary rows, the rows to append to the uid table, the uid of
+    every term the new graphs use (for the encode joins), and the
+    results of ``extra`` in order.  Every persisted frame is appended
+    to ``handles``; ``flags`` must already be persisted.
+    """
+    lookup = flags.select("term").distinct().join(term_uids, "term", "left").persist()
+    handles.append(lookup)
+    unseen = lookup.where(F.col("uid").isNull()).select("term")
+    max_uid, new_idx, sec_idx, *extra_results = run_concurrently(
+        [
+            lambda: term_uids.agg(F.max("uid")).collect()[0][0] or 0,
+            lambda: zip_with_index(unseen, ["term"], persist_input=False, handles=handles),
+            lambda: zip_with_index(
+                _sections(flags),
+                ["graph", "sec_ord", "term"],
+                persist_input=False,
+                handles=handles,
+            ),
+            *extra,
+        ]
+    )
+    new_uids = new_idx.select(
+        "term", (F.col("idx") + 1 + F.lit(max_uid)).cast("long").alias("uid")
+    )
+    graph_uids = lookup.where(F.col("uid").isNotNull()).unionByName(new_uids)
+    dict_df = (
+        _rank_sections(sec_idx)
+        .join(graph_uids, "term")
+        .select("graph", "term", "section", "sec_id", "uid")
+    )
+    return dict_df, new_uids, graph_uids, extra_results
 
 
 def build_dictionary(

@@ -181,17 +181,6 @@ def sort_spo(triples_enc: DataFrame, num_partitions: int | None = None) -> DataF
     ).sortWithinPartitions("graph", "s_id", "p_id", "o_id")
 
 
-def write_triples(triples_enc: DataFrame, path: str) -> None:
-    """Materialize SPO-sorted triples, partitioned by graph.
-
-    Partition column ``graph`` ≈ the reference's one-HDT-per-graph
-    layout (src/sparql.rs:40-48); graph-filtered queries prune
-    partitions before any IO (the reference's "filter before loading"
-    optimization, src/sparql.rs:86-99, is free here).
-    """
-    sort_spo(triples_enc).write.mode("overwrite").partitionBy("graph").parquet(path)
-
-
 def decode_triples(triples_enc: DataFrame, term_uids: DataFrame) -> DataFrame:
     """(graph, s_id, p_id, o_id) → string triples, for emission only
     (mirror of the reference decoding at result time, src/sparql.rs:491-497)."""

@@ -276,7 +276,7 @@ def scrub_pii(
     DuckDB oracle uses.  ``engine="jvm"`` keeps the pure-Catalyst
     ``regexp_count``/``regexp_replace`` formulation; the two are
     result-identical (pinned by
-    tests/test_text.py::test_scrub_pii_engines_agree — the patterns
+    tests/test_ops.py::test_scrub_pii_engines_agree — the patterns
     use only ASCII classes, \\b and bounded quantifiers, where Java
     and RE2 semantics coincide).  Both are per-row maps: no shuffle,
     trivially parallel at 100 TB."""

@@ -49,10 +49,10 @@ the same layout and the writes are plain ``write.parquet`` — swap
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import time
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -61,6 +61,7 @@ from pyspark.sql import functions as F
 from de_spark.dictionary import build_dict_and_uids, position_flags
 from de_spark.encode import encode_triples, plan_spo_partitions, planned_sort_spo
 from de_spark.graph import KnowledgeGraph
+from de_spark.session import run_concurrently
 from de_spark.stats import void_stats_from_dict
 
 
@@ -104,7 +105,6 @@ def _write_stage(
     name: str,
     resume: bool,
     partition_by: list[str] | None = None,
-    sort: bool = False,
 ) -> StageResult:
     if _stage_done(stage_dir, resume):
         with open(_manifest_path(stage_dir)) as f:
@@ -122,15 +122,8 @@ def _write_stage(
         # serializing ahead of them (r7: the eager variant lengthened
         # the 4-core critical path by the whole planning prefix)
         df = df()
-    # sort_spo range-shuffles, whose boundary-sampling pass re-runs the
-    # encode joins once.  r6 persisted the encode output to avoid that
-    # re-run; with shuffled-hash encode joins the re-run is CHEAPER
-    # than materializing + re-reading a fact-table-sized cache
-    # (measured at sf1.0 local[32]: persist+sort+write 73.8s vs
-    # nopersist 29.6s, r7 profile) and holds no executor storage.
-    out = sort_spo(df) if sort else df
     obs = Observation(f"lineage_{name}")
-    out = out.observe(obs, *_lineage_exprs(out))
+    out = df.observe(obs, *_lineage_exprs(df))
     writer = out.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
@@ -158,15 +151,8 @@ def _write_stage(
 
 
 def _parallel_stages(jobs: list[tuple]) -> list[StageResult]:
-    """Run independent _write_stage calls on driver threads.  Spark's
-    scheduler interleaves their tasks; Catalyst planning of one action
-    overlaps execution of the other (the py4j calls release the GIL).
-    """
-    if len(jobs) == 1:
-        return [_write_stage(*jobs[0])]
-    with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-        futs = [pool.submit(_write_stage, *j) for j in jobs]
-        return [f.result() for f in futs]
+    """Run independent _write_stage calls on driver threads."""
+    return run_concurrently([functools.partial(_write_stage, *j) for j in jobs])
 
 
 def build(

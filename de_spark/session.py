@@ -10,6 +10,7 @@ partitions sized to cores locally (cluster deployments override via
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import SparkSession
 
@@ -81,3 +82,17 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def run_concurrently(thunks: list) -> list:
+    """Call independent Spark actions on driver threads and return their
+    results in order.  Spark's scheduler interleaves their tasks;
+    Catalyst planning of one action overlaps execution of the others
+    (the py4j calls release the GIL).  If one raises, the error
+    propagates only after every other call has finished, so no write
+    is still in flight when the caller handles it."""
+    if len(thunks) == 1:
+        return [thunks[0]()]
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futs = [pool.submit(t) for t in thunks]
+        return [f.result() for f in futs]

@@ -50,11 +50,12 @@ def _whole_files(spark: SparkSession, paths: list[str], single_graph: str | None
     files = spark.read.text(paths, wholetext=True).select(
         F.input_file_name().alias("path"), F.col("value").alias("content")
     )
-    graph_col = (
-        F.lit(single_graph)
-        if single_graph
-        else F.concat(F.lit("file:///"), F.element_at(F.split("path", "/"), -1))
-    )
+    # input_file_name() is a URI: decode the last segment back to the
+    # file's own name, as graph_iri_for_file (and so sync_dir) names it;
+    # '+' is literal in a URI path, so it must survive url_decode
+    name = F.element_at(F.split("path", "/"), -1)
+    name = F.url_decode(F.regexp_replace(name, r"\+", "%2B"))
+    graph_col = F.lit(single_graph) if single_graph else F.concat(F.lit("file:///"), name)
     return files.withColumn("graph", graph_col)
 
 

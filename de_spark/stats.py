@@ -27,14 +27,29 @@ def void_stats(triples_raw: DataFrame) -> DataFrame:
     )
 
 
+def void_stats_from_flags(triples_raw: DataFrame, flags: DataFrame) -> DataFrame:
+    """VOID stats from the position flags (a store add): one flags row
+    per (graph, term), so the distinct counts are counts of set flags
+    and the only pass over the triples is a per-graph count.  Same rows as
+    :func:`void_stats`, without its three countDistinct shuffles."""
+    distinct = flags.groupBy("graph").agg(
+        F.count(F.when(F.col("is_p") == 1, 1)).alias("properties"),
+        F.count(F.when(F.col("is_s") == 1, 1)).alias("distinct_subjects"),
+        F.count(F.when(F.col("is_o") == 1, 1)).alias("distinct_objects"),
+    )
+    counts = triples_raw.groupBy("graph").agg(F.count("*").alias("triples"))
+    return counts.join(distinct, "graph").select(
+        "graph", "triples", "properties", "distinct_subjects", "distinct_objects"
+    )
+
+
 def void_stats_from_dict(dict_df: DataFrame, triples_enc: DataFrame) -> DataFrame:
     """VOID stats derived from the four-section dictionary — the
     distinct-counts are free (the dictionary IS the distinct term set
     per position: subjects = so+s sections, objects = so+o, properties
     = p), so the only fact-table pass is a plain per-graph count with
     map-side combine.  Replaces three exact countDistinct shuffles of
-    the triples table (round-1 ``void_stats_encoded`` path) with a
-    groupBy over the much smaller dict.
+    the triples table with a groupBy over the much smaller dict.
     """
     sec_counts = dict_df.groupBy("graph").agg(
         F.sum(F.when(F.col("section") == "p", 1).otherwise(0)).cast("long").alias("properties"),
@@ -48,16 +63,4 @@ def void_stats_from_dict(dict_df: DataFrame, triples_enc: DataFrame) -> DataFram
     trip_counts = triples_enc.groupBy("graph").agg(F.count("*").alias("triples"))
     return trip_counts.join(F.broadcast(sec_counts), "graph").select(
         "graph", "triples", "properties", "distinct_subjects", "distinct_objects"
-    )
-
-
-def void_stats_encoded(triples_enc: DataFrame) -> DataFrame:
-    """Same VOID stats computed over the uid-encoded triples — counts
-    are identical (term↔uid is a bijection) but the countDistinct
-    shuffle moves 8-byte longs instead of term strings."""
-    return triples_enc.groupBy("graph").agg(
-        F.count("*").alias("triples"),
-        F.countDistinct("p_id").alias("properties"),
-        F.countDistinct("s_id").alias("distinct_subjects"),
-        F.countDistinct("o_id").alias("distinct_objects"),
     )

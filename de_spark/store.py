@@ -18,6 +18,18 @@ partitioned by graph, so
   dropped graph are harmless, like the reference's leftover side-car
   cache files, and are compacted away by a rebuild).
 
+An add parses its input once (persisted) and runs its independent
+Spark actions on driver threads, as ``pipeline.build`` does: the uid
+table's max, the two index passes (unseen terms → uids; sections →
+sec_ids) and the collect of the input's graphs (each with whether the
+store has it) run together; then come the clash check and the marker;
+then the dict, triples (encode + SPO sort) and stats appends run
+together, and the term_uids append runs last (why: see the comment at
+that append).  The commit protocol is unchanged: the write-ahead marker
+is written before the first append and removing it is the commit
+point, so a failure in any thread leaves the marker and the next
+mutation or ``load`` rolls the store back.
+
 On Iceberg these appends/drops are snapshot commits
 (``overwritePartitions``), giving the reference's per-request snapshot
 semantics (AggregateHdt::get_snapshot, src/sparql.rs:78-118) as
@@ -31,10 +43,11 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from de_spark.dictionary import build_dictionary, position_flags, zip_with_index
+from de_spark.dictionary import extend_dict_and_uids, position_flags
 from de_spark.encode import encode_triples, sort_spo
 from de_spark.graph import KnowledgeGraph
-from de_spark.stats import void_stats
+from de_spark.session import run_concurrently
+from de_spark.stats import void_stats_from_flags
 
 
 class GraphExistsError(ValueError):
@@ -43,10 +56,35 @@ class GraphExistsError(ValueError):
 
 
 def _graphs(spark: SparkSession, base_dir: str) -> set[str]:
-    return {
-        r["graph"]
-        for r in spark.read.parquet(f"{base_dir}/stats").select("graph").collect()
-    }
+    """The store's committed graphs (a torn add is rolled back first, so
+    its graphs never count as registered)."""
+    _recover_pending(base_dir)
+    return {r["graph"] for r in _stats_graphs(spark, base_dir).collect()}
+
+
+def _stats_graphs(spark: SparkSession, base_dir: str) -> DataFrame:
+    # a given schema skips Spark's footer-reading schema inference job
+    return spark.read.schema("graph STRING").parquet(f"{base_dir}/stats")
+
+
+def _input_graphs(spark: SparkSession, base_dir: str, flags: DataFrame) -> dict[str, bool]:
+    """The graphs of an add's input, each mapped to whether the store
+    already has it: one aggregate over the input's flags and the stats
+    table (one exchange, where a distinct plus a ``_graphs`` scan take
+    two actions)."""
+    tagged = flags.select("graph", F.lit(1).alias("is_input"), F.lit(0).alias("registered"))
+    tagged = tagged.unionByName(
+        _stats_graphs(spark, base_dir).select(
+            "graph", F.lit(0).alias("is_input"), F.lit(1).alias("registered")
+        )
+    )
+    rows = (
+        tagged.groupBy("graph")
+        .agg(F.max("is_input").alias("is_input"), F.max("registered").alias("registered"))
+        .where(F.col("is_input") == 1)
+        .collect()
+    )
+    return {r["graph"]: bool(r["registered"]) for r in rows}
 
 
 _PENDING = ".pending_add.json"
@@ -102,8 +140,9 @@ def add_graph(spark: SparkSession, base_dir: str, triples_raw: DataFrame) -> Non
     """Append new named graph(s) to a materialized store.
 
     Every graph in ``triples_raw`` must be new (GraphExistsError
-    otherwise).  One pass extends term_uids with unseen terms; the new
-    partitions are appended to triples/dict/stats.  The append is
+    otherwise); an input with no rows adds nothing.  Unseen terms get
+    uids after the current max; the new partitions are appended to
+    triples/dict/stats concurrently, then term_uids.  The append is
     journaled: a write-ahead marker + file manifest makes a torn add
     roll back on the next mutation (see ``_recover_pending``), so
     foreachBatch replays are exactly-once.
@@ -112,45 +151,57 @@ def add_graph(spark: SparkSession, base_dir: str, triples_raw: DataFrame) -> Non
     import os
 
     _recover_pending(base_dir)
-    new_graphs = {r["graph"] for r in triples_raw.select("graph").distinct().collect()}
-    existing = _graphs(spark, base_dir)
-    clash = new_graphs & existing
-    if clash:
-        raise GraphExistsError(f"graphs already exist (immutable): {sorted(clash)}")
+    # every consumer below reads the input: parse it once
+    raw = triples_raw.persist()
+    flags = position_flags(raw).persist()
+    handles: list[DataFrame] = [raw, flags]
+    try:
+        # fixed schema: no inference job in the serial prefix (as _graphs)
+        uids = spark.read.schema("term STRING, uid LONG").parquet(f"{base_dir}/term_uids")
+        # the input's graphs are collected beside the index passes:
+        # nothing is written before the marker below
+        dict_df, new_uids, graph_uids, (input_graphs,) = extend_dict_and_uids(
+            flags, uids, handles, extra=[lambda: _input_graphs(spark, base_dir, flags)]
+        )
+        if not input_graphs:
+            return  # nothing to add
+        clash = {g for g, registered in input_graphs.items() if registered}
+        if clash:
+            raise GraphExistsError(f"graphs already exist (immutable): {sorted(clash)}")
 
-    marker = f"{base_dir}/{_PENDING}"
-    txn = {
-        "graphs": sorted(new_graphs),
-        "manifest": {t: _list_files(base_dir, t) for t in _ADD_TABLES},
-    }
-    tmp_marker = marker + ".tmp"
-    with open(tmp_marker, "w") as f:
-        json.dump(txn, f)
-    os.replace(tmp_marker, marker)
+        marker = f"{base_dir}/{_PENDING}"
+        txn = {
+            "graphs": sorted(input_graphs),
+            "manifest": {t: _list_files(base_dir, t) for t in _ADD_TABLES},
+        }
+        tmp_marker = marker + ".tmp"
+        with open(tmp_marker, "w") as f:
+            json.dump(txn, f)
+        os.replace(tmp_marker, marker)
 
-    uids = spark.read.parquet(f"{base_dir}/term_uids")
-    max_uid = uids.agg(F.max("uid").alias("m")).collect()[0]["m"] or 0
-
-    flags = position_flags(triples_raw).persist()
-    handles: list[DataFrame] = [flags]
-    new_terms = flags.select("term").distinct().join(uids, "term", "left_anti")
-    appended = zip_with_index(new_terms, ["term"], id_col="idx", handles=handles).select(
-        "term", (F.col("idx") + 1 + F.lit(max_uid)).cast("long").alias("uid")
-    )
-    appended.write.mode("append").parquet(f"{base_dir}/term_uids")
-    all_uids = spark.read.parquet(f"{base_dir}/term_uids")
-
-    build_dictionary(triples_raw, all_uids, flags, handles=handles).write.mode(
-        "append"
-    ).parquet(f"{base_dir}/dict")
-    p_vocab = flags.where(F.col("is_p") == 1).select("term").distinct()
-    sort_spo(encode_triples(triples_raw, all_uids, p_vocab)).write.mode(
-        "append"
-    ).partitionBy("graph").parquet(f"{base_dir}/triples")
-    void_stats(triples_raw).write.mode("append").parquet(f"{base_dir}/stats")
-    os.remove(marker)  # COMMIT: the add is durable only past this point
-    for h in handles:
-        h.unpersist()
+        p_vocab = flags.where(F.col("is_p") == 1).select("term").distinct()
+        triples = sort_spo(encode_triples(raw, graph_uids, p_vocab))
+        stats = void_stats_from_flags(raw, flags)
+        run_concurrently(
+            [
+                lambda: dict_df.write.mode("append").parquet(f"{base_dir}/dict"),
+                lambda: triples.write.mode("append")
+                .partitionBy("graph")
+                .parquet(f"{base_dir}/triples"),
+                lambda: stats.write.mode("append").parquet(f"{base_dir}/stats"),
+            ]
+        )
+        # term_uids goes last, never beside the other appends: a write to
+        # a path makes Spark refresh the file index of every cached plan
+        # reading that path (recacheByPath) and rebuild its cache.  The
+        # cached uid lookup reads term_uids, so in-flight dict/encode
+        # joins would find each new term twice: once in the refreshed
+        # lookup, once in new_uids.
+        new_uids.write.mode("append").parquet(f"{base_dir}/term_uids")
+        os.remove(marker)  # COMMIT: the add is durable only past this point
+    finally:
+        for h in handles:
+            h.unpersist()
 
 
 def drop_graph(spark: SparkSession, base_dir: str, graph: str) -> bool:
@@ -161,7 +212,6 @@ def drop_graph(spark: SparkSession, base_dir: str, graph: str) -> bool:
     layout it rewrites the unaffected partitions of the unpartitioned
     tables and drops the graph's partition dir from triples.
     """
-    _recover_pending(base_dir)
     if graph not in _graphs(spark, base_dir):
         return False
     # triples: partitioned by graph → drop the partition directory
@@ -251,7 +301,6 @@ def execute_update(spark: SparkSession, base_dir: str, update_text: str) -> list
     from de_spark.query.update import UpdateRefusedError, parse_update
 
     ops = parse_update(update_text)
-    _recover_pending(base_dir)
     registered = _graphs(spark, base_dir)
 
     # phase 1: validate all operations against the CURRENT snapshot,

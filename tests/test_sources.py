@@ -73,6 +73,21 @@ def test_trig_demotes_named_graphs():
     assert parse_trig(APPLE_TTL)[1] is False
 
 
+def test_whole_file_graph_named_like_file(spark, tmp_path):
+    """Turtle/RDF-XML files are read whole; their graph IRI is the file's
+    own name, not its URI-escaped form, as ``graph_iri_for_file`` (and
+    so ``store.sync_dir``) names it."""
+    from de_spark.sources.nt import graph_iri_for_file
+
+    paths = []
+    for name, text in [("my fruit+1%.ttl", APPLE_TTL), ("a b.rdf", APPLE_RDFXML)]:
+        (tmp_path / name).write_text(text)
+        paths.append(str(tmp_path / name))
+    df, _, _ = read_rdf(spark, paths)
+    got = {r["graph"] for r in df.select("graph").distinct().collect()}
+    assert got == {graph_iri_for_file(p) for p in paths}
+
+
 def test_router_all_formats(spark, tmp_path):
     """One graph from .nt + .ttl + .rdf + .owl + .trig + .nq inputs;
     quad-capable formats surface the demotion warning; unknown

@@ -64,6 +64,83 @@ def test_add_and_drop_graph(spark, tmp_path):
     assert store.drop_graph(spark, base, "file:///nope.hdt") is False
 
 
+def test_added_graph_content(spark, tmp_path):
+    """An added graph's dict/stats rows match a build over that graph
+    alone; its unseen terms take the next uids in term order; existing
+    uids are unchanged."""
+    from de_spark.stats import void_stats
+
+    base = str(tmp_path / "store")
+    build(triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt"), base)
+    before = {r["term"]: r["uid"] for r in spark.read.parquet(f"{base}/term_uids").collect()}
+
+    pine = _pineapple_raw(spark)
+    store.add_graph(spark, base, pine)
+    kg = store.load(spark, base)
+
+    # sec_ids are per graph: the same as building the graph on its own
+    alone, _ = build(pine, str(tmp_path / "alone"))
+    dict_cols = ["graph", "term", "section", "sec_id"]
+    pine_dict = kg.dict_df.where("graph = 'file:///pineapple.hdt'")
+    assert sorted(pine_dict.select(dict_cols).collect()) == sorted(
+        alone.dict_df.select(dict_cols).collect()
+    )
+    stats = kg.stats.where("graph = 'file:///pineapple.hdt'").collect()
+    assert [tuple(r) for r in stats] == [tuple(r) for r in void_stats(pine).collect()]
+
+    after = {r["term"]: r["uid"] for r in kg.term_uids.collect()}
+    assert {t: after[t] for t in before} == before
+    new_terms = sorted(set(after) - set(before))
+    assert new_terms
+    top = max(before.values())
+    assert [after[t] for t in new_terms] == list(range(top + 1, top + 1 + len(new_terms)))
+    # dict rows carry the uid of their term
+    assert all(after[r["term"]] == r["uid"] for r in pine_dict.collect())
+
+
+def test_failed_append_rolls_back(spark, tmp_path, monkeypatch):
+    """A failure inside one of the concurrent appends propagates out of
+    add_graph and leaves the write-ahead marker; the next load rolls
+    every table back to its pre-add files and rows."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    base = str(tmp_path / "store")
+    build(triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt"), base)
+    tables = ("term_uids", "dict", "stats", "triples")
+
+    def snapshot():
+        return {
+            t: (store._list_files(base, t), spark.read.parquet(f"{base}/{t}").count())
+            for t in tables
+        }
+
+    pre = snapshot()
+    real_sort_spo = store.sort_spo
+
+    def failing_sort_spo(df):
+        # fails when the triples append runs, beside the dict/stats appends
+        return real_sort_spo(df).withColumn(
+            "s_id", F.coalesce(F.raise_error("injected failure").cast("long"), F.col("s_id"))
+        )
+
+    monkeypatch.setattr(store, "sort_spo", failing_sort_spo)
+    with pytest.raises(Exception, match="injected failure"):
+        store.add_graph(spark, base, _pineapple_raw(spark))
+    assert os.path.exists(f"{base}/{store._PENDING}")
+
+    store.load(spark, base)
+    assert not os.path.exists(f"{base}/{store._PENDING}")
+    assert snapshot() == pre
+
+    # the rolled-back store takes the same add cleanly
+    monkeypatch.undo()
+    store.add_graph(spark, base, _pineapple_raw(spark))
+    kg = store.load(spark, base)
+    assert kg.pattern(graph="file:///pineapple.hdt").count() == 12
+
+
 def test_sync_dir(spark, tmp_path):
     """S8 directory sync: new file → new graph; removed file → graph
     dropped (reference src/sparql.rs:235-294)."""
@@ -120,6 +197,57 @@ def test_cli_create_view_query(spark, tmp_path, capsys):
         "http://example.org/Pineapple",
         "http://example.org/Banana",
     ]
+
+
+def test_cli_load_adds_file_graphs(spark, tmp_path, capsys):
+    """``de load``: each file becomes a new graph named after it; loading
+    it again is refused and leaves the store as it was."""
+    from de_spark import cli
+
+    (tmp_path / "banana.nt").write_text(BANANA_NT)
+    (tmp_path / "pine apple.ttl").write_text(PINEAPPLE_TTL)
+    out_dir = str(tmp_path / "kg")
+    assert cli.main(["create", "-o", out_dir, "-d", str(tmp_path / "banana.nt")]) == 0
+
+    pine = str(tmp_path / "pine apple.ttl")
+    assert cli.main(["load", "-d", out_dir, "-f", pine]) == 0
+    assert cli.main(["load", "-d", out_dir, "-f", pine]) == 1
+    assert "already exist" in capsys.readouterr().err
+    kg = store.load(spark, out_dir)
+    assert sorted((r["graph"], r["triples"]) for r in kg.stats.collect()) == [
+        ("file:///banana.nt", 12),
+        ("file:///pine apple.ttl", 12),
+    ]
+    assert kg.triples.count() == 24
+
+
+def test_cli_load_glob_names_graphs_from_data(spark, tmp_path, capsys):
+    """``de load`` with a quoted glob: Spark expands it and names each
+    file's graph on its own, so a second load of the same file through
+    the glob (or by name) is refused and adds no rows."""
+    from de_spark import cli
+
+    (tmp_path / "banana.nt").write_text(BANANA_NT)
+    ttl_dir = tmp_path / "ttl"
+    ttl_dir.mkdir()
+    (ttl_dir / "pineapple.ttl").write_text(PINEAPPLE_TTL)
+    out_dir = str(tmp_path / "kg")
+    assert cli.main(["create", "-o", out_dir, "-d", str(tmp_path / "banana.nt")]) == 0
+
+    glob = str(ttl_dir / "*.ttl")
+    assert cli.main(["load", "-d", out_dir, "-f", glob]) == 0
+    kg = store.load(spark, out_dir)
+    n_dict = kg.dict_df.count()
+    assert cli.main(["load", "-d", out_dir, "-f", glob]) == 1
+    assert cli.main(["load", "-d", out_dir, "-f", str(ttl_dir / "pineapple.ttl")]) == 1
+    assert "already exist" in capsys.readouterr().err
+    kg = store.load(spark, out_dir)
+    assert sorted((r["graph"], r["triples"]) for r in kg.stats.collect()) == [
+        ("file:///banana.nt", 12),
+        ("file:///pineapple.ttl", 12),
+    ]
+    assert kg.triples.count() == 24
+    assert kg.dict_df.count() == n_dict
 
 
 def test_torn_add_recovers_without_duplicates(spark, tmp_path):
