@@ -158,24 +158,6 @@ def position_flags(triples_raw: DataFrame) -> DataFrame:
     )
 
 
-def build_term_uids(triples_raw: DataFrame, flags: DataFrame | None = None) -> DataFrame:
-    """Global term→uid table: every distinct term string (any position,
-    any graph) gets one dense long uid, ordered lexicographically.
-
-    Schema: term: string, uid: long (uid is 1-based).
-
-    Standalone path (unit tests).  The build pipeline uses
-    :func:`build_dict_and_uids`, which derives the uids from the
-    dictionary's own sorted layout in a single index pass; a store add
-    uses :func:`extend_dict_and_uids`.
-    """
-    if flags is None:
-        flags = position_flags(triples_raw)
-    all_terms = flags.select("term").distinct()
-    with_idx = zip_with_index(all_terms, ["term"], id_col="idx")
-    return with_idx.select("term", (F.col("idx") + 1).alias("uid"))
-
-
 def _sections(flags: DataFrame) -> DataFrame:
     """flags → (graph, term, section, sec_ord) four-section rows."""
     spo = flags.where((F.col("is_s") == 1) | (F.col("is_o") == 1)).select(

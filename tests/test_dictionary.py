@@ -3,7 +3,6 @@ from pyspark.sql import functions as F
 from de_spark.dictionary import (
     build_dict_and_uids,
     build_dictionary,
-    build_term_uids,
     position_flags,
     zip_with_index,
 )
@@ -32,8 +31,7 @@ def test_four_sections_apple(spark):
     """HDT golden from /root/reference/tests/resources/apple.hdt header:
     numSharedSubjectObject=1, 2 subjects, 9 objects, 7 predicates."""
     raw = apple_raw(spark)
-    uids = build_term_uids(raw)
-    d = build_dictionary(raw, uids)
+    d, _ = build_dict_and_uids(position_flags(raw))
     by_sec = {r["section"]: r["cnt"] for r in d.groupBy("section").count().withColumnRenamed("count", "cnt").collect()}
     assert by_sec["so"] == 1      # ex:Fruit is both subject and object
     assert by_sec["s"] == 1       # ex:Apple
@@ -67,7 +65,7 @@ def test_void_stats_apple_golden(spark):
 
 def test_encode_decode_roundtrip(spark):
     raw = triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt")
-    uids = build_term_uids(raw)
+    _, uids = build_dict_and_uids(position_flags(raw))
     enc = encode_triples(raw, uids)
     assert enc.count() == 12
     dec = decode_triples(enc, uids)
@@ -77,7 +75,7 @@ def test_encode_decode_roundtrip(spark):
 
 
 def test_fused_dict_and_uids_single_pass(spark):
-    """build_dict_and_uids: same sec_ids as the two-pass path; uids are
+    """build_dict_and_uids: same sec_ids as build_dictionary; uids are
     unique, deterministic, and equal to 1 + the term's min global index
     in (graph, sec_ord, term) order."""
     raw = apple_raw(spark)
@@ -86,7 +84,7 @@ def test_fused_dict_and_uids_single_pass(spark):
     uid_rows = {r["term"]: r["uid"] for r in u1.collect()}
 
     # sec_ids identical to the standalone dictionary path
-    d2 = build_dictionary(raw, build_term_uids(raw))
+    d2 = build_dictionary(raw, u1)
     ids1 = {(r["graph"], r["section"], r["term"]): r["sec_id"] for r in dict_rows}
     ids2 = {(r["graph"], r["section"], r["term"]): r["sec_id"] for r in d2.collect()}
     assert ids1 == ids2
@@ -112,13 +110,13 @@ def test_fused_dict_and_uids_single_pass(spark):
     assert back == {(r["s"], r["p"], r["o"]) for r in raw.collect()}
 
 
-def test_uids_are_dense_and_deterministic(spark):
+def test_uids_are_deterministic(spark):
     raw = triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt")
-    u1 = {r["term"]: r["uid"] for r in build_term_uids(raw).collect()}
-    u2 = {r["term"]: r["uid"] for r in build_term_uids(raw).collect()}
+    u1 = {r["term"]: r["uid"] for r in build_dict_and_uids(position_flags(raw))[1].collect()}
+    # a different input partitioning must not change any uid
+    u2 = {
+        r["term"]: r["uid"]
+        for r in build_dict_and_uids(position_flags(raw.repartition(3)))[1].collect()
+    }
     assert u1 == u2
-    ids = sorted(u1.values())
-    assert ids == list(range(1, len(ids) + 1))
-    # lexicographic order
-    terms_sorted = sorted(u1, key=lambda t: u1[t])
-    assert terms_sorted == sorted(terms_sorted)
+    assert len(set(u1.values())) == len(u1)

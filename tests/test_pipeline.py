@@ -4,6 +4,8 @@ the last completed stage)."""
 import json
 import os
 
+import pytest
+
 from de_spark.pipeline import build
 from de_spark.sources.nt import triples_from_nt_text
 from tests.fixtures import BANANA_NT
@@ -60,21 +62,78 @@ def test_checksum_is_partitioning_invariant(spark, tmp_path):
         assert (ma["rows"], ma["checksum"]) == (mb["rows"], mb["checksum"]), stage
 
 
-def test_overlap_paths_equivalent(spark, tmp_path, monkeypatch):
-    """The concurrent (uids ∥ dict ∥ triples) and sequential
-    (wide-local fallback) write paths are RESULT-IDENTICAL: uid
-    assignment is a pure function of the sorted index, so encoding
-    from the live uid frame vs after its write changes scheduling
-    only.  Pinned via the order-insensitive per-stage checksums."""
+def test_resume_paths_equivalent(spark, tmp_path):
+    """A fresh build and the two partial resumes give the same stages:
+    triples encoded against the checkpointed term_uids parquet (triples
+    and stats manifests removed) and against the live uid frame of a
+    rerun index pass (term_uids and dict manifests removed).  Uid
+    assignment is a pure function of the sorted index, so the
+    order-insensitive checksums must match, and match the pinned
+    values."""
     from de_spark.corpus import generate_corpus
     from de_spark.extract import extract_code_triples
 
     raw = extract_code_triples(generate_corpus(spark, 0.001))
-    fps = {}
-    for mode in ("always", "never"):
-        monkeypatch.setenv("DE_SPARK_OVERLAP_WRITES", mode)
-        out = str(tmp_path / f"kg_{mode}")
-        _, stages = build(raw, out)
-        fps[mode] = [(s.name, s.rows, s.checksum) for s in stages]
-        assert all(not s.skipped for s in stages)
-    assert fps["always"] == fps["never"]
+    out = str(tmp_path / "kg")
+    _, fresh = build(raw, out)
+    assert all(not s.skipped for s in fresh)
+    fps = {s.name: (s.rows, s.checksum) for s in fresh}
+    assert fps["triples"] == (36000, 5496059409556218670)
+    assert fps["term_uids"] == (11224, 7973002676626003130)
+    assert fps["dict"] == (24405, 2602832708772452264)
+
+    for removed in (("triples", "stats"), ("term_uids", "dict")):
+        for stage in removed:
+            os.remove(os.path.join(out, stage, "_manifest.json"))
+        _, stages = build(raw, out, resume=True)
+        assert [s.name for s in stages if not s.skipped] == list(removed)
+        assert [(s.name, s.rows, s.checksum) for s in stages] == [
+            (s.name, s.rows, s.checksum) for s in fresh
+        ]
+
+
+def test_torn_manifest_reruns_stage(spark, tmp_path, monkeypatch):
+    """A build killed while writing a stage manifest leaves no manifest
+    behind: resume reruns that stage instead of trusting (or failing to
+    parse) a partial one."""
+    import de_spark.pipeline as pipeline
+
+    raw = triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt")
+    _, ref = build(raw, str(tmp_path / "ref"))
+    want = next(s for s in ref if s.name == "triples")
+
+    real_dump = json.dump
+
+    def torn_dump(obj, f, **kw):
+        if isinstance(obj, dict) and obj.get("stage") == "triples":
+            f.write('{"stage": "trip')
+            raise RuntimeError("killed while writing the manifest")
+        real_dump(obj, f, **kw)
+
+    out = str(tmp_path / "kg")
+    monkeypatch.setattr(pipeline.json, "dump", torn_dump)
+    with pytest.raises(RuntimeError, match="killed"):
+        build(raw, out)
+    monkeypatch.undo()
+
+    _, stages = build(raw, out, resume=True)
+    got = next(s for s in stages if s.name == "triples")
+    assert not got.skipped
+    assert (got.rows, got.checksum) == (want.rows, want.checksum)
+    assert json.load(open(os.path.join(out, "triples", "_manifest.json")))["rows"] == 12
+
+
+def test_failed_build_unpersists(spark, tmp_path, monkeypatch):
+    """A failed stage must not leave the build's flags, index and uid
+    caches pinned in a long-lived session."""
+    import de_spark.pipeline as pipeline
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("triples stage failed")
+
+    raw = triples_from_nt_text(spark, BANANA_NT, "file:///banana.hdt")
+    spark.catalog.clearCache()
+    monkeypatch.setattr(pipeline, "plan_spo_partitions", boom)
+    with pytest.raises(RuntimeError, match="triples stage failed"):
+        build(raw, str(tmp_path / "kg"))
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
